@@ -251,8 +251,8 @@ class AppendLoad(Algorithm):
             # Affected partitions of THIS load, with raw values — the
             # ANALYZE scope (TableStatistics analyzes only touched
             # partitions, not the whole table). The atomic writer
-            # already collected them from the persisted frame; only a
-            # non-partitioned mode (no collection) re-scans here.
+            # observed them during its write; only OverwriteTable
+            # (which observes nothing) re-scans here.
             if writer.last_affected is not None:
                 self.affected = writer.last_affected
             else:

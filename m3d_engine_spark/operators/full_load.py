@@ -292,12 +292,11 @@ class FullLoad(Algorithm):
         if self.table:
             # Per-partition ANALYZE first, then table-level
             # (TableStatistics.scala:55-80). A full swap rewrites EVERY
-            # partition, so the freshly recovered listing IS the affected
-            # set here (values come back unescaped from
-            # list_table_partitions).
-            specs = (
-                cat.list_table_partitions(self.spark, self.table)
-                if self.partition_targets
-                else []
-            )
-            cat.compute_statistics(self.spark, self.table, partition_specs=specs)
+            # partition: a spec naming only the partition columns makes
+            # Spark count the rows of all of them in one grouped query.
+            if self.partition_targets:
+                cols = ", ".join(f"`{c}`" for c in self.partition_targets)
+                self.spark.sql(
+                    f"ANALYZE TABLE {self.table} PARTITION({cols}) COMPUTE STATISTICS"
+                )
+            cat.compute_statistics(self.spark, self.table)

@@ -20,7 +20,7 @@ import re as _re
 from functools import reduce
 from typing import Any, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -149,10 +149,29 @@ def collect_partitions(df: DataFrame, partition_columns: Sequence[str]) -> list[
     if not partition_columns:
         return []
     rows = df.select(*partition_columns).distinct().collect()
+    return _distinct_criteria(rows, partition_columns)
+
+
+def observe_partitions(df: DataFrame, partition_columns: Sequence[str]):
+    """``collect_partitions`` without a job of its own: returns
+    ``(observed, written)``, where ``written()``, called after
+    ``observed``'s first action (the write) finished, gives the criteria
+    that action's own tasks saw, with the columns' original types."""
+    obs = Observation()
+    observed = df.observe(
+        obs, F.collect_set(F.struct(*partition_columns)).alias("partitions")
+    )
+    return observed, lambda: _distinct_criteria(
+        obs.get["partitions"], partition_columns
+    )
+
+
+def _distinct_criteria(rows, partition_columns: Sequence[str]) -> list[list[tuple[str, Any]]]:
+    """Positional rows of partition values → canonical, deduped criteria."""
     out, seen = [], set()
     for row in rows:
         crit = tuple(
-            (c, None if row[c] == "" else row[c]) for c in partition_columns
+            (c, None if v == "" else v) for c, v in zip(partition_columns, row)
         )
         if crit not in seen:
             seen.add(crit)

@@ -15,10 +15,12 @@ five load modes:
 and the atomic protocol (write temp → backup existing partitions → move
 new into place → restore on failure, OutputWriter.scala:96-262).
 
-Scale notes: affected-partition discovery is a distinct+collect on the
-partition columns only; existing-partition reads are scoped with a
-Catalyst Column predicate (partition-pruned scan), unlike the
-reference's row-lambda filter which scanned the whole table (SURVEY §4).
+Scale notes: a partition rewrite evaluates the frame once, in the temp
+write — the partitions it wrote are observed by that write itself
+(``observe_partitions``), not found by persisting the frame and
+collecting its distinct partition values first; existing-partition reads are scoped with a Catalyst
+Column predicate (partition-pruned scan), unlike the reference's
+row-lambda filter which scanned the whole table (SURVEY §4).
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from m3d_engine_spark.plans.partitions import (
     add_missing_columns,
     collect_partitions,
+    observe_partitions,
     partition_predicate,
 )
 from m3d_engine_spark.sources.dfs import DFS
@@ -133,9 +136,10 @@ class AtomicWriter:
     # Off by default — the hash form below is the scale-friendly shape
     # (no small-files explosion across thousands of dirs).
     spread_output_files: bool = False
-    # Partition criteria the last write() touched, collected while the
-    # frame was persisted — callers needing the ANALYZE scope reuse this
-    # instead of re-scanning the source (None for non-partitioned modes).
+    # Partition criteria the last write() committed (the caller's
+    # ``affected`` plus the partitions the write job observed) —
+    # callers needing the ANALYZE scope reuse this instead of
+    # re-scanning the source (None for non-partitioned modes).
     last_affected: list | None = None
 
     def _dfs(self) -> DFS:
@@ -269,15 +273,18 @@ class AtomicWriter:
             return
         tmp = f"{base}__tmp_{uuid.uuid4().hex[:12]}"
         backup = f"{base}__bak_{uuid.uuid4().hex[:12]}"
-        self._write_dir(df, tmp)
-        _rename_or_raise(dfs, base, backup)
         try:
-            _rename_or_raise(dfs, tmp, base)
-        except Exception:
-            if dfs.exists(backup):
-                dfs.delete(base)
-                dfs.rename(backup, base)
-            raise
+            self._write_dir(df, tmp)
+            _rename_or_raise(dfs, base, backup)
+            try:
+                _rename_or_raise(dfs, tmp, base)
+            except Exception:
+                if dfs.exists(backup):
+                    dfs.delete(base)
+                    dfs.rename(backup, base)
+                raise
+        finally:
+            dfs.delete(tmp)  # a failed write's partial output
         dfs.delete(backup)
 
     def _overwrite_partitions(
@@ -289,20 +296,22 @@ class AtomicWriter:
         ``affected`` lets the caller hand in pre-collected criteria
         (append modes, emptied-partition deletes); they may include
         partitions the frame has NO rows for — those directories are
-        backed up and NOT replaced, i.e. the partition is deleted. Every
-        commit rename is CHECKED (_rename_or_raise), and the restore
-        path also removes partitions that were newly CREATED before the
-        failure — otherwise a retry would union the landing data with
-        its own half-committed copy and duplicate rows."""
+        backed up and NOT replaced, i.e. the partition is deleted.
+        Partitions the temp write observed are committed too, listed or
+        not. Every commit rename is CHECKED (_rename_or_raise), and the
+        restore path also removes partitions that were newly CREATED
+        before the failure — otherwise a retry would union the landing
+        data with its own half-committed copy and duplicate rows."""
         if not self.partition_columns:
             self._write_dir(df, self.target_location)
             return
         dfs = self._dfs()
         base = self.target_location.rstrip("/")
-        df = df.persist()
+        tmp = f"{base}__tmp_{uuid.uuid4().hex[:12]}"
+        backup = f"{base}__bak_{uuid.uuid4().hex[:12]}"
+        df, written = observe_partitions(df, self.partition_columns)
         try:
-            if affected is None:
-                affected = collect_partitions(df, self.partition_columns)
+            self._write_dir(df, tmp)
             # NULL and '' partition values share one on-disk directory
             # (__HIVE_DEFAULT_PARTITION__): caller-supplied criteria
             # carrying both would back up the same dir twice and abort
@@ -313,14 +322,11 @@ class AtomicWriter:
             # ANALYZE specs when the '' variant happens to win the
             # setdefault.
             by_rel: dict[str, Any] = {}
-            for crit in affected:
+            for crit in [*(affected or []), *written()]:
                 crit = [(c, None if v == "" else v) for c, v in crit]
                 by_rel.setdefault(partition_rel_path(crit), crit)
             affected = list(by_rel.values())
             self.last_affected = affected
-            tmp = f"{base}__tmp_{uuid.uuid4().hex[:12]}"
-            backup = f"{base}__bak_{uuid.uuid4().hex[:12]}"
-            self._write_dir(df, tmp)
             moved: list[tuple[str, str]] = []  # (final, backup) pairs
             created: list[str] = []  # moved in with no prior dir
             try:
@@ -346,11 +352,9 @@ class AtomicWriter:
                     dfs.delete(final_dir)
                     dfs.rename(bak_dir, final_dir)
                 raise
-            finally:
-                dfs.delete(tmp)
-            dfs.delete(backup)
         finally:
-            df.unpersist()
+            dfs.delete(tmp)
+        dfs.delete(backup)
 
 
 def write_output(
@@ -395,8 +399,16 @@ def write_output(
             # partition-overwrite replace only the partitions present
             # in df — never the whole table.
             target_schema = spark.table(table).schema
-            aligned = add_missing_columns(w, target_schema)
             overwrite = load_mode is not LoadMode.APPEND_UNION_PARTITIONS
+            # Only a plain overwrite can empty a partition (the join
+            # below rewrites every partition it reads); the insert job
+            # itself observes which partitions the frame has.
+            drop_emptied = bool(affected) and overwrite and (
+                load_mode is not LoadMode.APPEND_JOIN_PARTITIONS
+            )
+            if drop_emptied:
+                w, written = observe_partitions(w, partition_cols)
+            aligned = add_missing_columns(w, target_schema)
             if load_mode is LoadMode.APPEND_JOIN_PARTITIONS:
                 affected = collect_partitions(w, partition_cols)
                 existing = spark.table(table).filter(partition_predicate(affected))
@@ -420,16 +432,14 @@ def write_output(
                 else:
                     spark.conf.set(conf_key, prev)
             failed_drops: list[str] = []
-            if affected and overwrite:
+            if drop_emptied:
                 # dynamic overwrite replaces only partitions PRESENT in
                 # the frame: a partition the load emptied entirely (all
                 # rows deleted by the CDC) must be dropped explicitly or
                 # its stale rows survive
                 from m3d_engine_spark.plans.partitions import sql_literal
 
-                present = {
-                    tuple(crit) for crit in collect_partitions(w, partition_cols)
-                }
+                present = {tuple(crit) for crit in written()}
                 # Canonicalize caller-supplied criteria the same way
                 # collect_partitions does ('' -> None, both name the
                 # default partition) and dedupe: an un-canonicalized

@@ -1,9 +1,8 @@
 """Unpersist audit: no algorithm run() may leave cached blocks behind.
 
-Every persist point in the engine (AtomicWriter's affected-partition
-persist, DeltaLoad's delta, DeltaLakeLoad's raw+condensed frames,
-FullMaterialization's to_cache) must be released by the time run()
-returns — a long-lived session (thrift server, notebook, orchestrated
+Every persist point in the engine (DeltaLoad's delta, DeltaLakeLoad's
+raw+condensed frames, FullMaterialization's to_cache) must be released
+by the time run() returns — a long-lived session (thrift server, notebook, orchestrated
 batch loop) would otherwise accumulate executor storage until eviction
 thrash. The base Algorithm.run() owns the guarantee via the
 ``_persisted`` registry; this test pins it for the algorithms that
